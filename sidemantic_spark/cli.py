@@ -91,16 +91,19 @@ def _load_layer(args, spark=None):
 
 
 def _print_rows(df, fmt: str) -> None:
+    from sidemantic_spark.server.transport import fetch, to_rows
+
     if fmt == "json":
-        for row in df.collect():
-            print(json.dumps(row.asDict(), default=str))
+        table = fetch(df)[0]
+        for row in to_rows(table, df.schema):
+            print(json.dumps(dict(zip(table.column_names, row)), default=str))
     elif fmt == "csv":
         import csv
 
+        table = fetch(df)[0]
         w = csv.writer(sys.stdout)
-        w.writerow(df.columns)
-        for row in df.collect():
-            w.writerow([row[c] for c in df.columns])
+        w.writerow(table.column_names)
+        w.writerows(to_rows(table, df.schema))
     else:
         df.show(n=1000, truncate=False)
 

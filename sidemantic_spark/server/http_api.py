@@ -26,8 +26,10 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from sidemantic_spark.server.transport import fetch, json_result
+
 MAX_BODY_BYTES = 10 * 1024 * 1024  # reference body-size middleware (api_server.py:125)
-MAX_RESULT_ROWS = 10_000  # driver-side collect cap for JSON/Arrow responses
+MAX_RESULT_ROWS = 10_000  # driver-side row cap for JSON/Arrow responses
 
 
 def _client_errors() -> tuple:
@@ -174,7 +176,6 @@ class SemanticHttpServer:
         limit = body.get("limit")
         cap = None
         if limit is None or int(limit) > MAX_RESULT_ROWS:
-            # collect()-to-JSON responses must stay driver-safe
             cap = MAX_RESULT_ROWS
             limit = cap + 1
         return self.layer.query(
@@ -201,37 +202,17 @@ class SemanticHttpServer:
 
 
 def _df_to_rows(df) -> list[dict]:
-    return [
-        {k: _json_val(v) for k, v in row.asDict().items()} for row in df.collect()
-    ]
-
-
-def _json_val(v):
-    import datetime
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
+    return json_result(df, None)["rows"]
 
 
 def _df_to_arrow_bytes(df, cap: int | None = None) -> tuple[bytes, bool]:
-    import io
-
     import pyarrow as pa
 
-    table = df.toArrow()
-    truncated = cap is not None and table.num_rows > cap
-    if truncated:
-        table = table.slice(0, cap)
-    sink = io.BytesIO()
+    table, truncated = fetch(df, cap)
+    sink = pa.BufferOutputStream()
     with pa.ipc.new_stream(sink, table.schema) as writer:
         writer.write_table(table)
-    return sink.getvalue(), truncated
+    return sink.getvalue().to_pybytes(), truncated
 
 
 def _make_handler(server: SemanticHttpServer):
@@ -240,20 +221,16 @@ def _make_handler(server: SemanticHttpServer):
             pass
 
         def _deny(self, code: int, msg: str) -> None:
-            payload = json.dumps({"error": msg}).encode()
-            self.send_response(code)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(payload)))
-            self.end_headers()
-            self.wfile.write(payload)
+            self._ok(json.dumps({"error": msg}).encode(), code=code)
 
         def _ok(
             self,
             payload: bytes,
             ctype: str = "application/json",
             extra_headers: dict | None = None,
+            code: int = 200,
         ) -> None:
-            self.send_response(200)
+            self.send_response(code)
             self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(payload)))
             for k, v in (extra_headers or {}).items():
@@ -409,34 +386,20 @@ def _make_handler(server: SemanticHttpServer):
             ):
                 return self._deny(400, "user-attributes header required")
             try:
-                if self.path == "/query":
-                    df, cap = server.handle_query(body, user=user)
-                    rows = _df_to_rows(df)
-                    truncated = cap is not None and len(rows) > cap
-                    if truncated:
-                        rows = rows[:cap]
-                    return self._ok(
-                        json.dumps({"rows": rows, "truncated": truncated}).encode()
-                    )
-                if self.path == "/query.arrow":
-                    df, cap = server.handle_query(body, user=user)
-                    payload, truncated = _df_to_arrow_bytes(df, cap)
-                    return self._ok(
-                        payload,
-                        ctype="application/vnd.apache.arrow.stream",
-                        extra_headers={"X-Truncated": str(truncated).lower()},
-                    )
-                if self.path == "/sql":
-                    df = server.layer.sql(
-                        body.get("sql") or "", user=user
-                    ).limit(MAX_RESULT_ROWS + 1)
-                    rows = _df_to_rows(df)
-                    truncated = len(rows) > MAX_RESULT_ROWS
-                    if truncated:
-                        rows = rows[:MAX_RESULT_ROWS]
-                    return self._ok(
-                        json.dumps({"rows": rows, "truncated": truncated}).encode()
-                    )
+                if self.path in ("/query", "/query.arrow", "/sql"):
+                    if self.path == "/sql":
+                        df = server.layer.sql(body.get("sql") or "", user=user)
+                        cap = MAX_RESULT_ROWS
+                    else:
+                        df, cap = server.handle_query(body, user=user)
+                    if self.path == "/query.arrow":
+                        payload, truncated = _df_to_arrow_bytes(df, cap)
+                        return self._ok(
+                            payload,
+                            ctype="application/vnd.apache.arrow.stream",
+                            extra_headers={"X-Truncated": str(truncated).lower()},
+                        )
+                    return self._ok(json.dumps(json_result(df, cap)).encode())
                 if self.path == "/compile":
                     sql = server.handle_compile(body, user=user)
                     return self._ok(json.dumps({"sql": sql}).encode())

@@ -9,8 +9,8 @@ Tools:
 - ``list_models``   — semantic graph summary
 - ``get_model``     — one model's dimensions/metrics/relationships
 - ``compile_query`` — structured query -> Spark SQL text
-- ``run_query``     — structured query -> rows (limit-capped)
-- ``run_sql``       — semantic SQL -> rows (limit-capped)
+- ``run_query``     — structured query -> rows (capped, with ``truncated``)
+- ``run_sql``       — semantic SQL -> rows (capped, with ``truncated``)
 - ``create_chart``  — structured query -> Vega-Lite v5 spec
 """
 
@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import json
 import sys
+
+from sidemantic_spark.server.transport import json_result
 
 PROTOCOL_VERSION = "2024-11-05"
 MAX_ROWS = 1000
@@ -168,16 +170,14 @@ class McpServer:
         return {"sql": self.layer.compile(**self._query_kwargs(args))}
 
     def tool_run_query(self, args: dict):
-        from sidemantic_spark.server.http_api import _df_to_rows
-
-        df = self.layer.query(**self._query_kwargs(args))
-        return {"rows": _df_to_rows(df)}
+        # the client's own limit: json_result applies MAX_ROWS and
+        # reports the cut
+        kwargs = {**self._query_kwargs(args), "limit": args.get("limit")}
+        return json_result(self.layer.query(**kwargs), MAX_ROWS)
 
     def tool_run_sql(self, args: dict):
-        from sidemantic_spark.server.http_api import _df_to_rows
-
-        df = self.layer.sql(args["sql"], user=self.user_attributes).limit(MAX_ROWS)
-        return {"rows": _df_to_rows(df)}
+        df = self.layer.sql(args["sql"], user=self.user_attributes)
+        return json_result(df, MAX_ROWS)
 
     def tool_create_chart(self, args: dict):
         """Query + Vega-Lite spec (reference mcp_server.py:486 chart

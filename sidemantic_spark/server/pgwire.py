@@ -33,6 +33,8 @@ import socketserver
 import struct
 import threading
 
+from sidemantic_spark.server.transport import fetch, to_rows
+
 # type OIDs from the Postgres catalog (public protocol constants)
 _OID_BOOL = 16
 _OID_INT8 = 20
@@ -358,7 +360,7 @@ class PgWireServer:
         df = self.layer.sql(stripped, user=user)
         cols = [(f.name, _oid_for_spark_type(f.dataType.simpleString()))
                 for f in df.schema.fields]
-        rows = [tuple(r) for r in df.collect()]
+        rows = to_rows(fetch(df)[0], df.schema)
         return (cols, rows, f"SELECT {len(rows)}")
 
     def _enforce_access(self, sql: str, user: dict | None) -> None:
@@ -488,28 +490,29 @@ class _Session:
 
     def _simple_query(self, sql: str) -> None:
         # multiple statements separated by ';' run in order (protocol
-        # requires one combined response sequence, then one ReadyForQuery)
+        # requires one combined response sequence, then one ReadyForQuery);
+        # an empty string still gets its EmptyQueryResponse
         statements = [s for s in sql.split(";") if s.strip()]
-        if not statements:
-            self._send(M.empty_query())
-            self._send(M.ready())
-            return
-        for stmt in statements:
-            try:
-                result = self.server.execute(stmt, self.user_attrs)
-            except Exception as exc:
-                self._send(M.error(str(exc).splitlines()[0] if str(exc) else repr(exc)))
+        for stmt in statements or [""]:
+            if not self._run(stmt):
                 break
-            if result is None:
-                self._send(M.empty_query())
-                continue
-            cols, rows, tag_str = result
-            if cols:
-                self._send(M.row_description(cols))
-                for row in rows:
-                    self._send(M.data_row(row))
-            self._send(M.command_complete(tag_str))
         self._send(M.ready())
+
+    def _run(self, sql: str) -> bool:
+        """Send one statement's result, or its error (-> False)."""
+        try:
+            result = self.server.execute(sql, self.user_attrs)
+        except Exception as exc:
+            self._send(M.error(str(exc).splitlines()[0] if str(exc) else repr(exc)))
+            return False
+        if result is None:
+            self._send(M.empty_query())
+            return True
+        cols, rows, tag_str = result
+        if cols:
+            self._send(M.row_description(cols) + b"".join(map(M.data_row, rows)))
+        self._send(M.command_complete(tag_str))
+        return True
 
     # -- extended protocol (minimal) ---------------------------------
 
@@ -567,21 +570,4 @@ class _Session:
 
     def _exec_portal(self, body: bytes) -> None:
         name, _ = self._read_cstr(body, 0)
-        sql = self._portals.get(name, "")
-        if not sql.strip():
-            self._send(M.empty_query())
-            return
-        try:
-            result = self.server.execute(sql, self.user_attrs)
-        except Exception as exc:
-            self._send(M.error(str(exc).splitlines()[0] if str(exc) else repr(exc)))
-            return
-        if result is None:
-            self._send(M.empty_query())
-            return
-        cols, rows, tag_str = result
-        if cols:
-            self._send(M.row_description(cols))
-            for row in rows:
-                self._send(M.data_row(row))
-        self._send(M.command_complete(tag_str))
+        self._run(self._portals.get(name, ""))

@@ -51,16 +51,17 @@ class WorkbenchSession:
 
     def run(self, sql: str) -> QueryResult:
         """Execute semantic SQL, bounded by ``row_limit``."""
+        from sidemantic_spark.server.transport import fetch, to_rows
+
         t0 = time.perf_counter()
         try:
             compiled = self.layer.rewrite(sql)
-            df = self.layer.sql(sql).limit(self.row_limit)
-            rows = [tuple(r) for r in df.collect()]
-            cols = list(df.columns)
+            df = self.layer.sql(sql)
+            table, _ = fetch(df, self.row_limit)
             self.history.append(sql)
             return QueryResult(
-                columns=cols,
-                rows=rows,
+                columns=table.column_names,
+                rows=to_rows(table, df.schema),
                 compiled_sql=compiled,
                 elapsed_ms=(time.perf_counter() - t0) * 1000,
             )

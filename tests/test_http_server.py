@@ -327,6 +327,31 @@ def test_uncapped_result_not_marked_truncated(server):
     assert out["truncated"] is False and len(out["rows"]) == 3
 
 
+def test_benchmark_transport_entry_points(server):
+    """The layered benchmark's traced HTTP run (perfbench/workloads.py)
+    builds a request's DataFrame and renders it through these four
+    http_api names; pin their shapes so a refactor cannot break it."""
+    import pyarrow as pa
+
+    from sidemantic_spark.server import http_api
+
+    assert http_api.MAX_RESULT_ROWS == 10_000
+    body = {"metrics": ["orders.revenue"], "dimensions": ["orders.status"],
+            "order_by": ["status"]}
+    df, cap = server.handle_query(body)
+    assert cap == http_api.MAX_RESULT_ROWS
+    rows = http_api._df_to_rows(df)
+    assert isinstance(rows, list) and [r["status"] for r in rows] == ["F", "O", "P"]
+    assert isinstance(rows[0]["revenue"], str)  # decimals render as text
+    payload, truncated = http_api._df_to_arrow_bytes(df, cap)
+    assert isinstance(payload, bytes) and truncated is False
+    assert pa.ipc.open_stream(payload).read_all().num_rows == 3
+    payload, truncated = http_api._df_to_arrow_bytes(df, 2)
+    assert truncated is True and pa.ipc.open_stream(payload).read_all().num_rows == 2
+    df, cap = server.handle_query({**body, "limit": 2})
+    assert cap is None and len(http_api._df_to_rows(df)) == 2
+
+
 def test_session_exchange_and_readyz(spark, sf_dir):
     """Bearer-token -> short-lived session exchange (reference
     server/api_server.py): cookie mode sets an HttpOnly SameSite cookie,

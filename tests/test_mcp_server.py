@@ -73,6 +73,37 @@ def test_run_sql_and_errors(mcp):
     assert resp["error"]["code"] == -32601
 
 
+def test_truncation_indicator(mcp, monkeypatch):
+    """Server-capped results say so (mirrors the HTTP server's test;
+    the cap is shrunk so a 3-group result overflows it)."""
+    import sidemantic_spark.server.mcp as mcp_mod
+
+    monkeypatch.setattr(mcp_mod, "MAX_ROWS", 2)
+    out, _ = _tool(mcp, "run_query", {
+        "metrics": ["orders.revenue"], "dimensions": ["orders.status"],
+        "order_by": ["status"],
+    })
+    assert out["truncated"] is True and len(out["rows"]) == 2
+
+    # explicit under-cap limit: the client asked for 2 of 3
+    out, _ = _tool(mcp, "run_query", {
+        "metrics": ["orders.revenue"], "dimensions": ["orders.status"],
+        "order_by": ["status"], "limit": 2,
+    })
+    assert out["truncated"] is False and len(out["rows"]) == 2
+
+    out, _ = _tool(mcp, "run_sql", {
+        "sql": "SELECT orders.status, orders.order_count FROM orders",
+    })
+    assert out["truncated"] is True and len(out["rows"]) == 2
+
+    monkeypatch.setattr(mcp_mod, "MAX_ROWS", 3)
+    out, _ = _tool(mcp, "run_sql", {
+        "sql": "SELECT orders.status, orders.order_count FROM orders",
+    })
+    assert out["truncated"] is False and len(out["rows"]) == 3
+
+
 def test_stdio_loop(mcp):
     stdin = io.StringIO(
         json.dumps({"jsonrpc": "2.0", "id": 1, "method": "initialize"}) + "\n"
