@@ -243,13 +243,13 @@ def profile_minhash(spark, sf_dir: str) -> dict:
     df = spark.table("documents")
     rec: dict = {}
 
-    n_docs = dd._bounded_count(df, max(dd._SPREAD_CAP, 100_000))
+    n_docs, n_bytes = dd.estimate_bytes(df, ["doc_id", "text"])
     rec["n_docs_probe"] = n_docs
-    # auto resolves to bucket-local at EVERY size since ea1d538 (the
-    # broadcast verify is explicit-opt-in only); the label is kept for
+    rec["bytes_probe"] = n_bytes
+    # bucket-local is minhash's only verify; the label is kept for
     # record continuity
     rec["verify_path"] = "bucket-local"
-    d = dd._spread(df, n_docs)
+    d = dd._spread(df, n_bytes)
     feat = d.select(
         F.col("doc_id").alias("__id"), dd._norm(F.col("text")).alias("__norm")
     ).select(
@@ -470,7 +470,7 @@ def main() -> None:
     # second decade (VERDICT r9 ask #1): the heavy dedup trio at sf10
     # (100x rows). Per-decade wall ratio flat-or-falling = the
     # operators hold their scaling curve across the broadcast->
-    # long-format verify gate (500k docs > broadcast_doc_cap: the
+    # long-format verify gate (500k docs exceed the byte budget: the
     # corpus-scale paths run for real here, not just in plan tests)
     sf10_results: dict[str, dict] = {}
     minhash_profiles: dict[str, dict] = {}
@@ -529,11 +529,11 @@ def main() -> None:
         # 17.6s vs 3.2-4.2s settled, identical code+data)
         _session_gc(spark)
         minhash_lsh_pairs(
-            docs_sf1, jaccard_threshold=0.4, broadcast_verify=False
+            docs_sf1, jaccard_threshold=0.4
         ).count()
         bl = _timed(
             lambda s, d: minhash_lsh_pairs(
-                docs_sf1, jaccard_threshold=0.4, broadcast_verify=False
+                docs_sf1, jaccard_threshold=0.4
             ),
             spark, sf1, heavy_repeats,
         )

@@ -28,45 +28,96 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Mersenne prime 2^31-1: affine permutation products of two 31-bit
 # values stay < 2^62, inside bigint range (Spark 4 runs ANSI mode, so a
 # long overflow is an error, not a wrap).
 _P = (1 << 31) - 1
 
-# ngram small-corpus gate (<=: single checkpointed gram pass +
-# broadcast verify). Module-level so tests can exercise the
-# corpus-scale path on small inputs by patching it.
-_NGRAM_SMALL_CAP = 100_000
-# corpus-scale verify prune: broadcast-semi-join the candidate id set
-# into the verify side's gram pass when it fits this many ids
-# (2M longs ~ 16 MB raw, well inside the 64 MB broadcast budget)
-_NGRAM_PRUNE_ID_CAP = 2_000_000
+# The one size budget of the dedup/search/similarity family: a frame
+# is spread, checkpointed or broadcast only when the columns it would
+# carry fit in this many bytes (see estimate_bytes). Module-level so
+# tests can force either side of every gate by patching it.
+_BYTE_BUDGET = 64 << 20
+
+_FIXED_WIDTH = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.LongType: 8, T.FloatType: 4, T.DoubleType: 8, T.DateType: 4,
+    T.TimestampType: 8, T.TimestampNTZType: 8,
+}
 
 
-_SPREAD_CAP = 100_000
+def _fixed_width(dt: T.DataType) -> int | None:
+    if isinstance(dt, T.DecimalType):
+        return 8 if dt.precision <= 18 else 16
+    return _FIXED_WIDTH.get(type(dt))
 
 
-def _bounded_count(df: DataFrame, cap: int) -> int:
-    """Row count bounded at cap+1: CollectLimit short-circuits the scan
-    once cap+1 rows exist, so the probe costs O(cap) rows even on a
-    100 TB input (the operator-level analogue of AQE's size probes)."""
-    return df.select(F.lit(1)).limit(cap + 1).count()
+def _row_bytes(df: DataFrame, cols: list[str]) -> tuple[int, Column]:
+    """A row's size over ``cols`` as (fixed, payload): ``fixed`` bytes
+    every row costs (each fixed-width value's schema width, plus the
+    8-byte offset-and-size word Spark's row format keeps for each
+    variable-width value) and a ``payload`` column of the variable
+    bytes (STRING/BINARY ``octet_length``, ARRAY ``size`` x element
+    width; NULL counts 0)."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    fixed, payload = 0, F.lit(0).cast("long")
+    for c in cols:
+        dt = types[c]
+        width = _fixed_width(dt)
+        if width is not None:
+            fixed += width
+            continue
+        elem = _fixed_width(dt.elementType) if isinstance(dt, T.ArrayType) else None
+        if isinstance(dt, (T.StringType, T.BinaryType)):
+            size = F.octet_length(F.col(c))
+        elif elem is not None:
+            size = F.size(F.col(c)) * F.lit(elem)
+        else:
+            raise TypeError(f"no byte size for column {c}: {dt.simpleString()}")
+        fixed += 8
+        payload = payload + F.coalesce(size, F.lit(0))
+    return fixed, payload
 
 
-def _spread(df: DataFrame, n_rows: int) -> DataFrame:
-    """Repartition to the session's parallelism when the bounded row
-    count says the corpus is small: tiny corpora usually arrive as one
-    or two scan partitions (single small files), the downstream
-    signature/banding stages are CPU-bound, and shuffling <= 100k tiny
-    rows is negligible next to the utilization it buys. Above the cap
-    the file scan is already split-parallel and an unconditional
+def estimate_bytes(df: DataFrame, cols: list[str]) -> tuple[int, int]:
+    """(rows, bytes) of ``df`` over ``cols`` (see :func:`_row_bytes`),
+    exact up to the budget.
+
+    Every row costs at least its fixed width, so more than
+    ``_BYTE_BUDGET // fixed`` rows cannot fit: the probe is a
+    ``limit(bound + 1)`` under one count-and-sum aggregate, the same
+    jobs as a ``limit(n).count()`` (two under AQE). Over the budget
+    both numbers are lower bounds that already exceed it. The row
+    bound is per input partition, not global: the plan runs one task
+    per input partition, each reading at most the row bound, then a
+    single-partition exchange (a ``take`` scans partitions
+    incrementally but ships the rows to the driver).
+    """
+    fixed, payload = _row_bytes(df, cols)
+    r = (
+        df.select(payload.alias("__b"))
+        .limit(_BYTE_BUDGET // fixed + 1)
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("__b").alias("b"))
+        .first()
+    )
+    rows = int(r["n"])
+    return rows, rows * fixed + int(r["b"] or 0)
+
+
+def _spread(df: DataFrame, nbytes: int) -> DataFrame:
+    """Repartition to the session's parallelism when the corpus fits the
+    byte budget: tiny corpora usually arrive as one or two scan
+    partitions (single small files), the downstream signature/banding
+    stages are CPU-bound, and shuffling a budget's worth of text is
+    negligible next to the utilization it buys. Above the budget the
+    file scan is already split-parallel and an unconditional
     corpus-wide shuffle of raw text would be the actual scale hazard,
-    so wide inputs pass through untouched. The count arrives from the
-    caller so one probe job can feed both this gate and the
-    broadcast-verify gate (no DataFrame->RDD conversion, no extra
-    jobs)."""
-    if n_rows <= _SPREAD_CAP:
+    so wide inputs pass through untouched. The size arrives from the
+    caller so one probe job can feed this gate and the operator's
+    other gates."""
+    if nbytes <= _BYTE_BUDGET:
         return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return df
 
@@ -874,8 +925,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     k: int = 5,
     jaccard_threshold: float = 0.5,
-    broadcast_verify: bool | None = None,
-    broadcast_doc_cap: int = 100_000,
     collapse_exact_dups: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding, verified with
@@ -886,17 +935,12 @@ def minhash_lsh_pairs(
     (band_idx, band_hash) is uniform under hashing, so the heavy
     self-join only materializes true bucket collisions.
 
-    ``broadcast_verify`` picks the verify strategy. None (auto, the
-    default) resolves to the bucket-local verify
+    The verify runs inside the capped buckets
     (:func:`bucket_local_jaccard_pairs`): one kernel pass, a join-free
-    plan, and measured faster than the broadcast verify at every scale
+    plan, and measured faster than a broadcast verify at every scale
     tried (r12: sf0.1 best 1.89 s vs 2.24-2.71 s on 32 cores, 2.2 vs
-    3.7 s on 8; sf1 3.38 vs 7.18 s) — it is also the only
-    100 TB-safe shape. ``True`` opts into the small-corpus broadcast
-    verify (the shingle frame must fit a broadcast: ~100k docs x ~200
-    shingles x 8B = ~160 MB; the feature frame is locally checkpointed
-    so the kernel still runs once); ``False`` forces bucket-local
-    explicitly.
+    3.7 s on 8; sf1 3.38 vs 7.18 s) — it is also the only 100 TB-safe
+    shape.
 
     ``collapse_exact_dups`` (None = auto by a one-scan duplication-ratio
     probe) pre-collapses identical normalized texts before any LSH
@@ -909,55 +953,43 @@ def minhash_lsh_pairs(
     scale are commonly 30-60% exact dups; the adversarial 10-deep
     clique build measured ~26 s -> ~4 s at 50k docs). On low-dup
     corpora the auto gate skips the prepass, keeping the original
-    single-wide-shuffle plan; explicit True/False skips the probe scan
-    (callers at known corpus shapes should pass it).
+    single-wide-shuffle plan; explicit True/False skips the full-scan
+    probe for a bounded :func:`estimate_bytes` one (callers at known
+    corpus shapes should pass it).
     """
-    rows_per_band = num_hashes // bands
-    if collapse_exact_dups is None:
-        # ONE full-scan probe feeds both gates: the collapse gate needs
-        # a full map-side-combined aggregate anyway, so the exact row
-        # count rides along and the separate bounded-count job is gone
-        # (r12 measurement: the two-probe sequence was ~0.7 s of the
-        # ~2.7 s sf0.1 operator)
-        n_docs, n_distinct = _probe_stats(df, text_col)
-        collapse_exact_dups = (
-            n_docs > 0 and (n_docs - n_distinct) / n_docs >= 0.15
-        )
-    else:
-        # explicit collapse decision: the spread gate only needs the
-        # cheap bounded count (CollectLimit short-circuits at the cap)
-        n_docs = _bounded_count(df, _SPREAD_CAP)
-    df = _spread(df, n_docs)
-    if collapse_exact_dups:
+    nbytes, collapse = _gate_probe(df, id_col, text_col, collapse_exact_dups)
+    df = _spread(df, nbytes)
+    if collapse:
         return _minhash_lsh_pairs_collapsed(
-            df, text_col, id_col, num_hashes, bands, k,
-            jaccard_threshold,
-            # auto verify -> bucket-local: one kernel pass, join-free,
-            # and measured faster than the broadcast verify at every
-            # scale tried (r12: sf0.1 best 1.89 s vs 2.24-2.71 s at 32
-            # cores, 2.2 vs 3.7 s at 8; sf1 3.38 vs 7.18 s)
-            (broadcast_verify if broadcast_verify is not None else False),
-            broadcast_doc_cap,
+            df, text_col, id_col, num_hashes, bands, k, jaccard_threshold
         )
     # normalize in its own projection (see _shingles note), then ONE
     # Arrow kernel computes shingle hashes AND the signature (the JVM
     # HOF shingle stage was the operator's dominant cost — see
-    # _sig_and_shingles_udf)
+    # _sig_and_shingles_udf). The shingle sets (PACKED int32 blobs —
+    # see _sig_and_shingles_udf pack_sh) ride the banding shuffle once
+    # per band and the whole operator is ONE kernel pass + ONE wide
+    # shuffle — the pair-grain verify measured ~30 GB of array shuffle
+    # at 500k docs (see bucket_local_jaccard_pairs)
     feat = df.select(
         F.col(id_col).alias("__id"),
         _norm(F.col(text_col)).alias("__norm"),
     ).select(
         "__id",
-        _sig_and_shingles_udf(num_hashes, k)(F.col("__norm")).alias("__f"),
+        _sig_and_shingles_udf(num_hashes, k, pack_sh=True)(
+            F.col("__norm")
+        ).alias("__f"),
     )
-    if broadcast_verify is None:
-        # auto -> bucket-local: ONE kernel pass, join-free, and measured
-        # faster than the broadcast verify at every scale tried (r12:
-        # sf0.1 best 1.89 s vs 2.24-2.71 s at 32 cores, 2.2 vs 3.7 s at
-        # 8 cores; sf1 3.38 vs 7.18 s in SCALE_CHECK_r12) — the
-        # broadcast path stays available for explicit callers
-        broadcast_verify = False
-    band_keys = F.explode(
+    banded_sets = feat.select(
+        "__id", F.col("__f.sh").alias("__sh"), _band_keys(num_hashes, bands)
+    ).select("__id", "__sh", "bk.band", "bk.bhash")
+    return bucket_local_jaccard_pairs(banded_sets, jaccard_threshold)
+
+
+def _band_keys(num_hashes: int, bands: int) -> Column:
+    """``bk`` = one (band, bhash) struct per band of ``__f.sig``."""
+    rows_per_band = num_hashes // bands
+    return F.explode(
         F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
             lambda b: F.struct(
@@ -968,59 +1000,6 @@ def minhash_lsh_pairs(
             ),
         )
     ).alias("bk")
-    if not broadcast_verify:
-        # corpus-scale path: verify INSIDE the capped buckets. The
-        # shingle sets (PACKED int32 blobs — see _sig_and_shingles_udf
-        # pack_sh) ride the banding shuffle once per band and the whole
-        # operator is ONE kernel pass + ONE wide shuffle — the
-        # pair-grain verify measured ~30 GB of array shuffle at 500k
-        # docs (see bucket_local_jaccard_pairs)
-        feat_p = df.select(
-            F.col(id_col).alias("__id"),
-            _norm(F.col(text_col)).alias("__norm"),
-        ).select(
-            "__id",
-            _sig_and_shingles_udf(num_hashes, k, pack_sh=True)(
-                F.col("__norm")
-            ).alias("__f"),
-        )
-        banded_sets = feat_p.select(
-            "__id",
-            F.col("__f.sh").alias("__sh"),
-            band_keys,
-        ).select("__id", "__sh", "bk.band", "bk.bhash")
-        return bucket_local_jaccard_pairs(banded_sets, jaccard_threshold)
-    # small-corpus path (explicit opt-in): band keys carry ONLY
-    # (id, band, bhash) and the verify is two map-only broadcast joins.
-    # The feature frame materializes once with a lazy localCheckpoint:
-    # ReuseExchange cannot deduplicate the two broadcast builds
-    # (PythonUDF canonicalization defeats it — the r11 plan ran the
-    # Arrow kernel THREE times: banding + both verify sides), and the
-    # caller opting into broadcast_verify already asserts the corpus
-    # features fit executor memory, so the checkpoint is bounded by the
-    # same budget as the broadcasts it feeds.
-    feat = feat.localCheckpoint(eager=False)
-    shingled = feat.select("__id", F.col("__f.sh").alias("__sh"))
-    with_sig = feat.select("__id", F.col("__f.sig").alias("__sig"))
-    banded = with_sig.select(
-        "__id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band)
-                    ).alias("bhash"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("__id", "bk.band", "bk.bhash")
-
-    cand = pairs_from_bucket_keys(banded)
-    return _exact_jaccard_verify(
-        cand, shingled, "__sh", jaccard_threshold, broadcast_verify
-    )
 
 
 def _collapse_groups(normed: DataFrame, group_cap: int) -> DataFrame:
@@ -1065,30 +1044,32 @@ def _within_group_pairs(groups: DataFrame, group_cap: int) -> DataFrame:
     )
 
 
-def _dup_ratio_collapse_gate(df: DataFrame, text_col: str) -> bool:
-    """Auto gate for the exact-dup collapse prepass: approx distinct of
-    the normalized text in one map-side partially-aggregated scan. HLL
-    runs over the 64-bit text hash, not the string (cheaper on long
-    docs); hash collisions and the ~2% HLL error are gating-only —
-    correctness never depends on this probe."""
-    n, u = _probe_stats(df, text_col)
-    return n > 0 and (n - u) / n >= 0.15
-
-
-def _probe_stats(df: DataFrame, text_col: str) -> tuple[int, int]:
-    """ONE full-scan probe job feeding every auto gate: exact row count
-    plus approx-distinct of the normalized text (map-side combined, one
-    tiny result row). The collapse gate needs the full scan anyway, so
-    the exact count comes for free and callers drop their separate
-    bounded-count probe job (r12: the two-probe sequence cost ~0.7 s of
-    a ~2.7 s operator at sf0.1 — guide §1.2, fewer driver jobs)."""
+def _gate_probe(
+    df: DataFrame, id_col: str, text_col: str, collapse: bool | None
+) -> tuple[int, bool]:
+    """(bytes of ``id_col`` + ``text_col``, collapse decision) for the
+    minhash/ngram gates, from ONE probe job. Auto collapse (None) runs
+    one full-scan aggregate: exact byte sum plus approx-distinct of the
+    normalized text (map-side combined, one tiny result row); HLL runs
+    over the 64-bit text hash, not the string (cheaper on long docs),
+    and hash collisions and the ~2% HLL error are gating-only —
+    correctness never depends on this probe. The collapse gate needs
+    the full scan anyway, so the size rides along and no separate size
+    probe runs (r12: a two-probe sequence cost ~0.7 s of a ~2.7 s
+    operator at sf0.1). An explicit decision needs only the bounded
+    :func:`estimate_bytes` probe."""
+    if collapse is not None:
+        return estimate_bytes(df, [id_col, text_col])[1], collapse
+    fixed, payload = _row_bytes(df, [id_col, text_col])
     r = df.agg(
         F.count(F.lit(1)).alias("n"),
+        F.sum(payload).alias("b"),
         F.approx_count_distinct(
             F.xxhash64(_norm(F.col(text_col)))
         ).alias("u"),
     ).first()
-    return int(r["n"]), int(r["u"])
+    n, u = int(r["n"]), int(r["u"])
+    return n * fixed + int(r["b"] or 0), n > 0 and (n - u) / n >= 0.15
 
 
 def _minhash_lsh_pairs_collapsed(
@@ -1099,8 +1080,6 @@ def _minhash_lsh_pairs_collapsed(
     bands: int,
     k: int,
     jaccard_threshold: float,
-    broadcast_verify: bool | None,
-    broadcast_doc_cap: int,
     group_cap: int = 256,
 ) -> DataFrame:
     """Exact-dup-collapsed MinHash (see :func:`minhash_lsh_pairs`).
@@ -1121,108 +1100,29 @@ def _minhash_lsh_pairs_collapsed(
     group grain — 256 distinct CONTENTS per bucket instead of 256
     docs — so dup-heavy corpora lose strictly fewer true pairs to
     capping than the uncollapsed path."""
-    rows_per_band = num_hashes // bands
     normed = df.select(
         F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm")
     )
     groups = _collapse_groups(normed, group_cap)
     within = _within_group_pairs(groups, group_cap)
+    # group-grain bucket-local verify: member arrays ride the banding
+    # shuffle, still zero joins in the plan; sets ship as packed int32
+    # blobs (see _sig_and_shingles_udf pack_sh)
     feat = groups.select(
         "__members",
-        _sig_and_shingles_udf(num_hashes, k)(F.col("__norm")).alias("__f"),
+        _sig_and_shingles_udf(num_hashes, k, pack_sh=True)(
+            F.col("__norm")
+        ).alias("__f"),
     )
-    band_keys = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(
-                    F.slice(F.col("__f.sig"), b * rows_per_band + 1, rows_per_band)
-                ).alias("bhash"),
-            ),
-        )
-    ).alias("bk")
-    if not broadcast_verify:
-        # corpus-scale path: group-grain bucket-local verify, member
-        # arrays ride the banding shuffle, still zero joins in the
-        # plan; sets ship as packed int32 blobs (see
-        # _sig_and_shingles_udf pack_sh)
-        feat_p = groups.select(
-            "__members",
-            _sig_and_shingles_udf(num_hashes, k, pack_sh=True)(
-                F.col("__norm")
-            ).alias("__f"),
-        )
-        banded_sets = feat_p.select(
-            F.element_at("__members", 1).alias("__id"),
-            F.col("__members").alias("__mem"),
-            F.col("__f.sh").alias("__sh"),
-            band_keys,
-        ).select("__id", "__mem", "__sh", "bk.band", "bk.bhash")
-        cross = bucket_local_jaccard_pairs(
-            banded_sets, jaccard_threshold, members_col="__mem"
-        )
-    else:
-        # small-corpus path (explicit opt-in): rep-grain candidates +
-        # broadcast verify, then two broadcast joins attach member
-        # arrays for expansion (the group frame is strictly smaller
-        # than the shingle frame that is already broadcast by the
-        # verify). Lazy localCheckpoint = single kernel pass across the
-        # banding and both broadcast verify builds (see
-        # minhash_lsh_pairs — ReuseExchange cannot dedup PythonUDF
-        # subtrees), bounded by the caller's broadcast opt-in.
-        rep_feat = feat.select(
-            F.element_at("__members", 1).alias("__id"),
-            F.col("__f.sh").alias("__sh"),
-            F.col("__f.sig").alias("__sig"),
-        ).localCheckpoint(eager=False)
-        banded = rep_feat.select(
-            "__id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.xxhash64(
-                            F.slice(
-                                F.col("__sig"),
-                                b * rows_per_band + 1,
-                                rows_per_band,
-                            )
-                        ).alias("bhash"),
-                    ),
-                )
-            ).alias("bk"),
-        ).select("__id", "bk.band", "bk.bhash")
-        verified = _exact_jaccard_verify(
-            pairs_from_bucket_keys(banded),
-            rep_feat.select("__id", "__sh"),
-            "__sh",
-            jaccard_threshold,
-            True,
-        )
-        members = groups.select(
-            F.element_at("__members", 1).alias("__rep"), "__members"
-        )
-        cross = _expand_member_pairs(
-            verified.join(
-                F.broadcast(
-                    members.select(
-                        F.col("__rep").alias("id_a"),
-                        F.col("__members").alias("__ma"),
-                    )
-                ),
-                "id_a",
-            ).join(
-                F.broadcast(
-                    members.select(
-                        F.col("__rep").alias("id_b"),
-                        F.col("__members").alias("__mb"),
-                    )
-                ),
-                "id_b",
-            )
-        )
+    banded_sets = feat.select(
+        F.element_at("__members", 1).alias("__id"),
+        F.col("__members").alias("__mem"),
+        F.col("__f.sh").alias("__sh"),
+        _band_keys(num_hashes, bands),
+    ).select("__id", "__mem", "__sh", "bk.band", "bk.bhash")
+    cross = bucket_local_jaccard_pairs(
+        banded_sets, jaccard_threshold, members_col="__mem"
+    )
     if jaccard_threshold > 1.0:
         return cross
     return within.unionByName(cross)
@@ -1308,8 +1208,8 @@ def connected_components(
     cluster_id = the smallest id in the component — the canonical
     "keep the lowest id, drop the rest" dedup decision.
 
-    SIZE-GATED EXECUTION (same pattern as the minhash broadcast
-    verify): a `pairs.limit(small_edge_limit + 1)` probe — CollectLimit
+    SIZE-GATED EXECUTION (probe-then-choose, like the family's byte
+    gates — see estimate_bytes): a `pairs.limit(small_edge_limit + 1)` probe — CollectLimit
     short-circuits the scan, so the probe is cheap even when pairs is
     huge — decides between
       * <= small_edge_limit edges: driver-side union-find with path
@@ -1572,7 +1472,7 @@ def simhash_near_dups(
         F.array_distinct(F.split(F.col("__norm"), " ")), lambda t: F.xxhash64(t)
     )
     sig = (
-        _spread(df, _bounded_count(df, _SPREAD_CAP))
+        _spread(df, estimate_bytes(df, [id_col, text_col])[1])
         .select(F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm"))
         .select("__id", token_hashes.alias("__th"))
         .select("__id", _simhash_sig_udf()(F.col("__th")).alias("__sig"))
@@ -1600,7 +1500,7 @@ def simhash_near_dups(
         ).alias("c"),
     ).select("__id", "c.band", "c.bhash")
     cand = pairs_from_bucket_keys(banded)
-    # long-format verify on the 8-byte signature (see minhash_lsh_pairs)
+    # long-format verify on the 8-byte signature (see _exact_jaccard_verify)
     long = cand.select("id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("__id"))
     both = (
         long.join(sig, "__id")
@@ -1663,27 +1563,18 @@ def ngram_jaccard_pairs(
     exact-dup cliques saturate cap-bound posting buckets: exact dups
     now occupy ONE posting each.
     """
-    if collapse_exact_dups is None:
-        # ONE full-scan probe feeds all three gates (spread, collapse,
-        # verify-strategy): the collapse gate is a full
-        # map-side-combined aggregate anyway, so the exact row count
-        # rides along and the two separate bounded-count jobs this
-        # operator used to run are gone (guide §1.2)
-        n_docs, n_distinct = _probe_stats(df, text_col)
-        collapse_exact_dups = (
-            n_docs > 0 and (n_docs - n_distinct) / n_docs >= 0.15
-        )
-    else:
-        n_docs = _bounded_count(df, max(_SPREAD_CAP, _NGRAM_SMALL_CAP))
-    df = _spread(df, n_docs)
-    small = n_docs <= _NGRAM_SMALL_CAP
+    # ONE probe job feeds all three gates (spread, collapse,
+    # verify-strategy); see _gate_probe
+    nbytes, collapse = _gate_probe(df, id_col, text_col, collapse_exact_dups)
+    df = _spread(df, nbytes)
+    small = nbytes <= _BYTE_BUDGET
     # gram hashes via the Arrow batch kernel (bit-identical to the
     # engine's xxhash64 over space-joined grams; the interpreted-HOF
     # per-gram string build it replaces was the operator's hottest
     # stage — see _word_gram_hashes_udf)
     normed = df.select(F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm"))
     members_map = None
-    if collapse_exact_dups:
+    if collapse:
         group_cap = 2048 if (prefix_filter and 0.0 < threshold <= 1.0) else 1024
         groups = _collapse_groups(normed, group_cap)
         within = _within_group_pairs(groups, group_cap)
@@ -1700,10 +1591,12 @@ def ngram_jaccard_pairs(
         # single gram-kernel pass: the inverted index and BOTH broadcast
         # verify sides read the checkpointed frame (the r11 plan ran the
         # Arrow kernel three times — ReuseExchange cannot deduplicate
-        # PythonUDF subtrees). Bounded by the same <=100k-doc gate that
-        # authorizes the broadcast verify; above it the long-format
-        # verify keeps the two-pass lazy DAG (a corpus-scale checkpoint
-        # would blow the storage budget).
+        # PythonUDF subtrees). Bounded by the byte gate that authorizes
+        # the broadcast verify: it sizes the id + text columns the gram
+        # arrays derive from (one 8-byte hash per word, about a word's
+        # worth of text). Above it the long-format verify keeps the
+        # two-pass lazy DAG (a corpus-scale checkpoint would blow the
+        # storage budget).
         docs = docs.localCheckpoint(eager=False)
     # inverted index as bucket keys: every indexed gram is a bucket;
     # candidate generation (grouping, capping, pair expansion, dedup,
@@ -1742,9 +1635,8 @@ def ngram_jaccard_pairs(
     )
     cand = pairs_from_bucket_keys(banded, bucket_cap=cap)
     if small:
-        # size-gated exact verify shared with minhash_lsh_pairs;
-        # `small` comes from the shared probe above (no extra count
-        # job): the checkpointed gram frame above feeds the index and
+        # size-gated exact verify; `small` comes from the shared
+        # probe above (no extra probe job): the checkpointed gram frame above feeds the index and
         # both broadcast verify sides — one kernel pass total
         verified = _exact_jaccard_verify(
             cand, docs, "__grams", threshold, broadcast_verify=True
@@ -1766,15 +1658,17 @@ def ngram_jaccard_pairs(
         # kernel pass then grams only docs that actually appear in a
         # candidate pair. Pruning cannot change results — the verify
         # join is inner on __id, so non-candidate docs never
-        # contribute. Above the id cap the prune is skipped (an
-        # unconditional broadcast would be the scale hazard) and the
-        # checkpoint alone keeps the candidate pipeline single-pass.
+        # contribute. When the id set's bytes exceed the budget (a
+        # long id costs 8 bytes, a string id 8 + its length) the prune
+        # is skipped (an unconditional broadcast would be the scale
+        # hazard) and the checkpoint alone keeps the candidate
+        # pipeline single-pass.
         cand = cand.localCheckpoint(eager=False)
         cand_ids = cand.select(
             F.explode(F.array("id_a", "id_b")).alias("__id")
         ).distinct()
         feats_src = normed
-        if _bounded_count(cand_ids, _NGRAM_PRUNE_ID_CAP) <= _NGRAM_PRUNE_ID_CAP:
+        if estimate_bytes(cand_ids, ["__id"])[1] <= _BYTE_BUDGET:
             feats_src = normed.join(F.broadcast(cand_ids), "__id", "left_semi")
         feats = feats_src.select(
             "__id", _word_gram_hashes_udf(n)(F.col("__norm")).alias("__grams")

@@ -471,8 +471,6 @@ def embedding_near_dup_pairs(
     bits_per_band: int = 4,
     min_cosine: float = 0.95,
     dim: int = 64,
-    broadcast_verify: bool | None = None,
-    broadcast_vec_cap: int = 100_000,
 ) -> DataFrame:
     """Corpus-wide near-duplicate pairs by cosine: banded
     random-hyperplane LSH candidates, exact-cosine verified.
@@ -488,25 +486,22 @@ def embedding_near_dup_pairs(
     MinHash — one shuffle on (band, bucket), capped in-bucket pair
     expansion, verify at full parallelism.
 
-    ``broadcast_verify`` picks the verify strategy (same pattern as the
-    minhash/ngram family): None (auto) resolves by a bounded-count
-    probe — an EAGER Spark job at plan-construction time (CollectLimit,
-    O(cap) rows even on a 100 TB input; pass an explicit True/False to
-    skip it). Under the cap, both vector sides attach with two MAP-ONLY
-    broadcast joins (r12: interleaved noop best 0.99 vs 1.17 s, the
-    verify's explode + id-join + pair-groupBy exchanges drop out of the
-    plan); above the cap the long-format verify stays — one vector
-    scan, no broadcast assumption, the only 100 TB-safe shape.
-    ``broadcast_vec_cap`` states the cap at the default dim=64 (100k x
-    64 doubles ~ 51 MB per side, the dedup family's broadcast budget);
-    the auto gate scales it by 64/dim so the same BYTE budget holds at
-    any dimensionality (dim=1024 would otherwise force ~820 MB
-    broadcasts per side). Both paths compute the identical JVM cosine
-    fold on the identical double arrays, so results are bit-identical
-    (equivalence pinned in tests and proven row-identical in
-    scripts/proto_emb_broadcast.py) — PROVIDED ``id_col`` is unique:
-    with duplicate ids the broadcast path emits one row per duplicate
-    match while the long path's pair-groupBy collapses them.
+    The verify strategy is chosen by the family's byte gate
+    (``dedup.estimate_bytes``, an EAGER bounded probe at
+    plan-construction time): when the id + double-vector columns fit the budget, both
+    vector sides attach with two MAP-ONLY broadcast joins (r12:
+    interleaved noop best 0.99 vs 1.17 s, the verify's explode +
+    id-join + pair-groupBy exchanges drop out of the plan); above it
+    the long-format verify stays — one vector scan, no broadcast
+    assumption, the only 100 TB-safe shape. Sizing bytes, not rows,
+    holds the budget at any dimensionality (dim=1024 under a flat
+    100k-row cap would force ~820 MB broadcasts per side). Both paths
+    compute the identical JVM cosine fold on the identical double
+    arrays, so results are bit-identical (equivalence pinned in tests
+    and proven row-identical in scripts/proto_emb_broadcast.py) —
+    PROVIDED ``id_col`` is unique: with duplicate ids the broadcast
+    path emits one row per duplicate match while the long path's
+    pair-groupBy collapses them.
 
     NOTE (r12 study, do not re-spend): a minhash-style BUCKET-LOCAL
     verify (vectors riding the banding shuffle, in-bucket JVM-cosine
@@ -519,10 +514,7 @@ def embedding_near_dup_pairs(
     oracle replicates (ROUND(x,6) knife-edge risk). See
     scripts/proto_emb_bucketlocal.py and OPTIMIZATION_r12.md §17.
     """
-    from sidemantic_spark.operators.dedup import (
-        _bounded_count,
-        pairs_from_bucket_keys,
-    )
+    from sidemantic_spark.operators import dedup
 
     planes = _det_planes(dim, bands * bits_per_band)
     emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -538,7 +530,7 @@ def embedding_near_dup_pairs(
     banded = bucketed.select(
         "__id", F.posexplode("__bands").alias("band", "bhash")
     )
-    cand = pairs_from_bucket_keys(banded)
+    cand = dedup.pairs_from_bucket_keys(banded)
 
     # per-VECTOR norm, computed once on the vector side and carried to
     # the verify: cosine(va, vb) re-ran BOTH interpreted 64-element
@@ -550,17 +542,12 @@ def embedding_near_dup_pairs(
     vecs = df.select(
         F.col(id_col).alias("__id"), emb.alias("__emb")
     ).withColumn("__nrm", _norm(F.col("__emb")))
-    if broadcast_verify is None:
-        # dim-scaled row cap: broadcast_vec_cap rows is the budget at
-        # the default dim=64 (~51 MB of packed doubles per side); wider
-        # vectors shrink the ROW cap so the BYTE budget stays fixed
-        # (ADVICE r12: dim=1024 under a flat 100k-row cap would force
-        # ~820 MB broadcasts per side). At dim<=64 the cap is unchanged,
-        # so bench/contract behavior is identical.
-        cap = min(broadcast_vec_cap, (broadcast_vec_cap * 64) // max(dim, 1))
-        # CollectLimit-bounded probe: O(cap) rows even on a 100 TB input
-        broadcast_verify = _bounded_count(df, cap) <= cap
-    if broadcast_verify:
+    # the broadcast carries the vectors as doubles: size them that way
+    _, vec_bytes = dedup.estimate_bytes(
+        df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col)),
+        [id_col, vec_col],
+    )
+    if vec_bytes <= dedup._BYTE_BUDGET:
         # small-corpus path: both vector sides broadcast, the verify is
         # two MAP-ONLY joins — the long-format explode + id-join +
         # pair-groupBy exchanges drop out of the plan entirely
@@ -585,7 +572,7 @@ def embedding_near_dup_pairs(
         )
     else:
         # long-format verify (one scan of the embedding column, no
-        # broadcast assumption — see minhash_lsh_pairs)
+        # broadcast assumption — see dedup._exact_jaccard_verify)
         long = cand.select(
             "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("__id")
         )
@@ -622,8 +609,6 @@ def semantic_dedup(
     bits_per_band: int = 4,
     dim: int = 64,
     max_iter: int = 20,
-    broadcast_verify: bool | None = None,
-    broadcast_vec_cap: int = 100_000,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): build
     the cosine near-duplicate pair graph over the embedding column,
@@ -656,11 +641,6 @@ def semantic_dedup(
         bits_per_band=bits_per_band,
         min_cosine=min_cosine,
         dim=dim,
-        # forwarded (ADVICE r12): callers can skip the eager auto-gate
-        # probe job or tune the broadcast budget; None keeps the auto
-        # probe
-        broadcast_verify=broadcast_verify,
-        broadcast_vec_cap=broadcast_vec_cap,
     )
     comps = connected_components(pairs, max_iter=max_iter).withColumnRenamed(
         "doc_id", "__node"

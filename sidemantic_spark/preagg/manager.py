@@ -101,11 +101,15 @@ class PreAggManager:
                 )
             else:
                 writer.parquet(path)
-                self.register_one(model, pa)
+                # the written frame's schema is the files' schema: passing
+                # it skips the read-back's schema-inference job
+                self.register_one(model, pa, df.schema)
             built.append(pa.physical_name(model.name))
         return built
 
-    def register_one(self, model: Model, pa: PreAggregation) -> bool:
+    def register_one(self, model: Model, pa: PreAggregation, schema=None) -> bool:
+        """Expose the rollup as a temp view; ``schema`` (the written
+        frame's) skips schema inference, else the files are read for it."""
         name = pa.physical_name(model.name)
         if pa.bucket_by and pa.buckets:
             # bucketed rollups live in the session catalog; a temp view
@@ -113,8 +117,11 @@ class PreAggManager:
             # bucket metadata
             return self.layer.spark.catalog.tableExists(name)
         path = self.path_for(model, pa)
+        reader = self.layer.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
         try:
-            df = self.layer.spark.read.parquet(path)
+            df = reader.parquet(path)
         except Exception:
             return False
         df.createOrReplaceTempView(name)

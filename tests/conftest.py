@@ -160,3 +160,46 @@ def assert_df_matches_oracle(df, duck_con, oracle_sql, check_columns=True, rel_t
                     )
                 else:
                     assert sv == dv, f"row {i}: {sv!r} != {dv!r}\nspark: {sr}\nduck:  {dr}"
+
+
+def assert_exact_minhash_jaccard(pairs, texts: dict, threshold: float) -> None:
+    """Every emitted (id_a, id_b, jaccard) pair is distinct with
+    id_a < id_b and carries the brute-force shingle-set Jaccard of
+    ``scripts/ref_kernels.py`` (rounded as the engine rounds), at or
+    above ``threshold`` — the precision check of
+    ``perfbench/check.py:minhash_precision``."""
+    import sys
+
+    scripts = os.path.join(os.path.dirname(__file__), "..", "scripts")
+    if scripts not in sys.path:
+        sys.path.insert(0, scripts)
+    import ref_kernels as RK
+
+    sets = {
+        i: set(RK.shingle_hash_set(RK.norm_text(t), 5)) for i, t in texts.items()
+    }
+    seen = set()
+    for a, b, jac in pairs:
+        assert a < b and (a, b) not in seen, (a, b)
+        seen.add((a, b))
+        exact = RK.round_half_up6(
+            len(sets[a] & sets[b]) / float(len(sets[a] | sets[b]))
+        )
+        assert jac == exact and jac >= threshold, (a, b, jac, exact)
+
+
+def jobs_fired(spark, fn):
+    """(fn(), number of Spark jobs it fired): counted by a fresh job
+    group on the status tracker once the listener bus has delivered
+    every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_fired_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 
 from sidemantic_spark.models.tpch import register_tables
 from sidemantic_spark.operators import dedup, multimodal, similarity, text
-from tests.conftest import assert_df_matches_oracle
+from tests.conftest import (
+    assert_df_matches_oracle,
+    assert_exact_minhash_jaccard,
+    jobs_fired,
+)
 
 
 @pytest.fixture(scope="module")
@@ -84,24 +88,25 @@ def test_minhash_on_documents(docs):
         assert 0.2 <= r.jaccard <= 1.0
 
 
-def test_minhash_verify_strategies_agree(docs):
-    """The map-only broadcast verify (small corpora) and the
-    long-format shuffle verify (corpus scale) must emit identical
-    (pair, jaccard) sets."""
+def test_minhash_pairs_carry_exact_jaccard(docs):
+    """Every pair the bucket-local verify emits carries the exact
+    shingle-set Jaccard of a brute-force reference and meets the
+    threshold, with and without the exact-dup collapse prepass, and
+    both paths emit the same (pair, jaccard) set."""
     d = docs.limit(300)
-    bc = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(
-            d, jaccard_threshold=0.2, broadcast_verify=True
-        ).collect()
+    outs = {
+        collapse: sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.minhash_lsh_pairs(
+                d, jaccard_threshold=0.2, collapse_exact_dups=collapse
+            ).collect()
+        )
+        for collapse in (True, False)
     }
-    lf = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(
-            d, jaccard_threshold=0.2, broadcast_verify=False
-        ).collect()
-    }
-    assert bc == lf and len(bc) > 0
+    assert outs[True] == outs[False] and outs[True]
+    assert_exact_minhash_jaccard(
+        outs[True], {r.doc_id: r.text for r in docs.collect()}, 0.2
+    )
 
 
 def test_bucket_verify_kernel_matches_brute_force(spark):
@@ -166,8 +171,8 @@ def test_bucket_verify_kernel_matches_brute_force(spark):
 def test_minhash_exact_dup_collapse_matches_uncollapsed(spark):
     """The exact-dup collapse prepass (r12: signatures/banding/verify
     at distinct-content grain, member expansion after verify) must emit
-    EXACTLY the uncollapsed pipeline's (pair, jaccard) rows, on both
-    verify strategies, over a corpus mixing 3-deep identical cliques,
+    EXACTLY the uncollapsed pipeline's (pair, jaccard) rows, each at its
+    exact Jaccard, over a corpus mixing 3-deep identical cliques,
     cross-clique near-dups, and unique docs."""
     from pyspark.sql import functions as F
 
@@ -188,16 +193,15 @@ def test_minhash_exact_dup_collapse_matches_uncollapsed(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     outs = {}
     for collapse in (True, False):
-        for bc in (True, False):
-            outs[(collapse, bc)] = sorted(
-                (r.id_a, r.id_b, r.jaccard)
-                for r in dedup.minhash_lsh_pairs(
-                    df, jaccard_threshold=0.3,
-                    broadcast_verify=bc, collapse_exact_dups=collapse,
-                ).collect()
-            )
-    ref = outs[(False, True)]
-    assert all(v == ref for v in outs.values())
+        outs[collapse] = sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.minhash_lsh_pairs(
+                df, jaccard_threshold=0.3, collapse_exact_dups=collapse,
+            ).collect()
+        )
+    ref = outs[False]
+    assert outs[True] == ref
+    assert_exact_minhash_jaccard(ref, dict(rows), 0.3)
     # identical copies pair at exactly 1.0; cliques of 3 contribute
     # C(3,2)=3 within pairs each
     ones = [p for p in ref if p[2] == 1.0]
@@ -297,7 +301,7 @@ def test_ngram_corpus_path_matches_small_path(docs, monkeypatch):
             frame, n=5, threshold=0.6
         ).collect())
     )
-    monkeypatch.setattr(dedup, "_NGRAM_SMALL_CAP", 10)
+    monkeypatch.setattr(dedup, "_BYTE_BUDGET", 1000)
     big_df = dedup.ngram_jaccard_pairs(frame, n=5, threshold=0.6)
     plan = big_df._jdf.queryExecution().executedPlan().toString()
     big = sorted(map(tuple, big_df.collect()))
@@ -307,6 +311,96 @@ def test_ngram_corpus_path_matches_small_path(docs, monkeypatch):
     # candidate subtree shows as a scan, not a third kernel)
     assert plan.count("ArrowEvalPython") <= 2, plan
     assert "ExistingRDD" in plan or "LogicalRDD" in plan or "Scan ExistingRDD" in plan, plan
+
+
+def test_ngram_prune_gate_sizes_id_bytes(spark, monkeypatch):
+    """The corpus-path verify prune is a byte gate, not a row cap: the
+    same 40 candidate ids fit the budget as int64 (40 x 8 B) and do not
+    as UUID strings (40 x (8 + 36) B), so only the int corpus gets the
+    broadcast semi-join. Rows are the same either way."""
+    ints = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("alpha beta gamma delta epsilon zeta eta theta "),
+            (F.col("id") % 4).cast("string"),
+        ).alias("text"),
+    )
+    rows = ints.collect()
+    uuid_of = {r.doc_id: f"{r.doc_id:08d}-0000-4000-8000-000000000000" for r in rows}
+    uuids = spark.createDataFrame(
+        [(uuid_of[r.doc_id], r.text) for r in rows], ["doc_id", "text"]
+    )
+    assert dedup.estimate_bytes(ints, ["doc_id"]) == (40, 320)
+    assert dedup.estimate_bytes(uuids, ["doc_id"]) == (40, 40 * 44)
+    # below every corpus size (so the corpus path runs), between the
+    # two id sets
+    monkeypatch.setattr(dedup, "_BYTE_BUDGET", 1000)
+    out = {}
+    for name, frame in (("int", ints), ("uuid", uuids)):
+        pairs = dedup.ngram_jaccard_pairs(
+            frame, n=3, threshold=0.5, collapse_exact_dups=False
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        out[name] = ("LeftSemi" in plan, sorted(map(tuple, pairs.collect())))
+    assert out["int"][0] and not out["uuid"][0]
+    assert out["int"][1] and sorted(
+        tuple(sorted((uuid_of[a], uuid_of[b]))) + (j,) for a, b, j in out["int"][1]
+    ) == out["uuid"][1]
+
+
+def test_embedding_verify_gate_sizes_vector_bytes(spark, monkeypatch):
+    """Same row count, different width: 200 dim=64 vectors fit a 1 MB
+    budget as doubles (200 x (16 + 512) B) and broadcast; 200 dim=1024
+    vectors (200 x (16 + 8192) B) take the long-format verify, whose
+    pair re-assembly explodes (id_a, id_b)."""
+    from sidemantic_spark.operators.similarity import embedding_near_dup_pairs
+
+    monkeypatch.setattr(dedup, "_BYTE_BUDGET", 1_000_000)
+    for dim, broadcast in ((64, True), (1024, False)):
+        vecs = spark.range(200).select(
+            F.col("id").alias("vec_id"),
+            F.transform(
+                F.sequence(F.lit(1), F.lit(dim)),
+                lambda i: (
+                    F.cos((F.col("id") % 3).cast("double"))
+                    + i.cast("double") / F.lit(float(dim))
+                ).cast("float"),
+            ).alias("embedding"),
+        )
+        plan = (
+            embedding_near_dup_pairs(vecs, min_cosine=0.9, dim=dim)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        long_format = "explode(array(id_a" in plan.replace(" ", "")
+        assert long_format != broadcast, (dim, plan)
+        if broadcast:
+            assert plan.count("BroadcastHashJoin") == 2, plan
+
+
+def test_probe_stats_gates_fire_no_extra_job(spark, monkeypatch):
+    """Auto collapse sizes the corpus inside its one full-scan probe
+    aggregate: no bounded size probe runs for minhash or ngram, and
+    building minhash fires exactly the jobs of that aggregate alone."""
+    rows = [(i, f"doc {i % 7} shares most of its words with others") for i in range(60)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    _, probe_jobs = jobs_fired(spark, lambda: df.agg(
+        F.count(F.lit(1)),
+        F.approx_count_distinct(F.xxhash64(dedup._norm(F.col("text")))),
+    ).first())
+    assert probe_jobs >= 1
+    sized = []
+    real = dedup.estimate_bytes
+    monkeypatch.setattr(
+        dedup, "estimate_bytes", lambda *a: sized.append(a) or real(*a)
+    )
+    _, jobs = jobs_fired(spark, lambda: dedup.minhash_lsh_pairs(df))
+    assert jobs == probe_jobs
+    # ngram's lazy localCheckpoint runs its shuffle stages at build
+    # time, so its job count is not the probe's alone
+    dedup.ngram_jaccard_pairs(df)
+    assert not sized
+    dedup.minhash_lsh_pairs(df, collapse_exact_dups=False)
+    assert len(sized) == 1
 
 
 def test_ngram_prefix_filter_bit_identical_to_full_posting(docs):

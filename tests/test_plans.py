@@ -700,11 +700,12 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark):
     verify runs INSIDE the capped buckets — the physical plan must have
     NO join at all (the pair-grain verify shipped ~30 GB of shingle
     arrays through a pair groupBy at 500k docs), and on an adversarial
-    64-deep exact-duplicate clique the bucket-local path must return
-    exactly the broadcast path's rows."""
+    64-deep exact-duplicate clique the collapsed and uncollapsed paths
+    must return the same rows, each carrying its exact Jaccard."""
     from pyspark.sql import functions as F
 
     from sidemantic_spark.operators.dedup import minhash_lsh_pairs
+    from tests.conftest import assert_exact_minhash_jaccard
 
     docs = spark.range(320).select(
         F.col("id").alias("doc_id"),
@@ -715,8 +716,7 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark):
         ).alias("text"),
     )
     plan = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=False,
-        collapse_exact_dups=False,
+        docs, jaccard_threshold=0.4, collapse_exact_dups=False,
     )._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan  # no pair-grain or id-grain join
     assert "Window" in plan  # row_number bucket cap
@@ -730,31 +730,35 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark):
     # the group cap must also be a map-side WindowGroupLimit so a
     # one-text corpus ships a bounded row count per partition
     cplan = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=False,
-        collapse_exact_dups=True,
+        docs, jaccard_threshold=0.4, collapse_exact_dups=True,
     )._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in cplan, cplan
     assert cplan.count("WindowGroupLimit") >= 2, cplan
     # exactly one wide shuffle before the dedup of verified survivors:
     # the banding exchange (AQE wraps others around the tiny tail)
     a = sorted(map(tuple, minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=True).collect()))
+        docs, jaccard_threshold=0.4, collapse_exact_dups=True).collect()))
     b = sorted(map(tuple, minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=False).collect()))
+        docs, jaccard_threshold=0.4, collapse_exact_dups=False).collect()))
     # the 5 variants differ by one trailing char, so ALL 320 docs form
     # one near-dup clique: every pair survives, on both paths
     assert a == b and len(a) == 320 * 319 // 2
+    assert_exact_minhash_jaccard(
+        a, {r.doc_id: r.text for r in docs.collect()}, 0.4
+    )
 
 
-def test_embedding_verify_broadcast_gate_plan_and_parity(spark):
-    """r12: embedding_near_dup_pairs' auto verify broadcasts both
-    vector sides when the corpus fits the dedup family's broadcast
-    budget (two MAP-ONLY joins — the long-format explode + id-join +
-    pair-groupBy exchanges leave the plan); above the cap (or forced)
-    the long-format verify stays. Both paths run the identical JVM
-    cosine fold on the identical arrays, so rows are bit-identical."""
+def test_embedding_verify_broadcast_gate_plan_and_parity(spark, monkeypatch):
+    """r12: embedding_near_dup_pairs' verify broadcasts both vector
+    sides when the vectors fit the dedup family's byte budget (two
+    MAP-ONLY joins — the long-format explode + id-join + pair-groupBy
+    exchanges leave the plan); above the budget (forced here by
+    patching it) the long-format verify stays. Both paths run the
+    identical JVM cosine fold on the identical arrays, so rows are
+    bit-identical."""
     from pyspark.sql import functions as F
 
+    from sidemantic_spark.operators import dedup
     from sidemantic_spark.operators.similarity import embedding_near_dup_pairs
 
     vecs = spark.range(300).select(
@@ -771,30 +775,22 @@ def test_embedding_verify_broadcast_gate_plan_and_parity(spark):
         ).alias("embedding"),
     )
     kw = dict(min_cosine=0.9, bands=4, bits_per_band=4, dim=64)
-    bplan = (
-        embedding_near_dup_pairs(vecs, broadcast_verify=True, **kw)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    bdf = embedding_near_dup_pairs(vecs, **kw)
+    bplan = bdf._jdf.queryExecution().executedPlan().toString()
     # verify = two broadcast joins; no sort-merge/shuffled-hash join
     # and no pair-grain groupBy re-assembly anywhere in the plan
     assert bplan.count("BroadcastHashJoin") == 2, bplan
     assert "SortMergeJoin" not in bplan and "ShuffledHashJoin" not in bplan
-    lplan = (
-        embedding_near_dup_pairs(vecs, broadcast_verify=False, **kw)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    monkeypatch.setattr(dedup, "_BYTE_BUDGET", 1000)
+    ldf = embedding_near_dup_pairs(vecs, **kw)
+    lplan = ldf._jdf.queryExecution().executedPlan().toString()
     # the long path re-assembles pairs with a groupBy — its signature
     # is the explode of the two pair sides feeding an id-keyed join
     # (join strategy itself is AQE's pick at this size)
     assert "Generate explode" in lplan, lplan
-    a = sorted(map(tuple, embedding_near_dup_pairs(
-        vecs, broadcast_verify=True, **kw).collect()))
-    b = sorted(map(tuple, embedding_near_dup_pairs(
-        vecs, broadcast_verify=False, **kw).collect()))
+    a = sorted(map(tuple, bdf.collect()))
+    b = sorted(map(tuple, ldf.collect()))
     assert a == b and len(a) > 0
-    # auto (None) resolves to broadcast under the cap: same rows again
-    c = sorted(map(tuple, embedding_near_dup_pairs(vecs, **kw).collect()))
-    assert c == a
     # r13 norm hoist: the per-PAIR verify projection computes exactly
     # one interpreted fold (the dot product) — each vector's norm fold
     # is hoisted to the per-vector side (a vector in k candidate pairs

@@ -14,7 +14,7 @@ import pytest
 from sidemantic_spark.models.tpch import build_layer
 from sidemantic_spark.preagg.matcher import PreAggregation
 from sidemantic_spark.sql.generator import QueryCompileError
-from tests.conftest import assert_df_matches_oracle
+from tests.conftest import assert_df_matches_oracle, jobs_fired
 
 PREAGG_PATH = "/tmp/sidemantic_spark_test_preaggs"
 
@@ -1519,3 +1519,37 @@ def test_pk_grain_rollup_projects_instead_of_aggregating(spark, sf_dir):
     pa3 = PreAggregation(name="no_pk", measures=["revenue"], dimensions=["status"])
     agg3 = spark.sql(rollup_select_sql(orders, pa3))
     assert pk_grain_select_sql(orders, pa3, agg3.schema) is None
+
+
+@pytest.mark.parametrize("partition", [None, "year"])
+def test_materialize_registers_with_written_schema(spark, sf_dir, tmp_path, monkeypatch, partition):
+    """materialize registers the rollup view with the schema of the
+    frame it just wrote, so reading it back runs no schema-inference
+    job: one job fewer than registering by inference, for a plain and
+    a partitioned rollup, with the same view schema."""
+    from functools import partial
+
+    from sidemantic_spark.preagg.manager import PreAggManager
+
+    layer = build_layer(spark, sf_dir)
+    orders = layer.graph.get_model("orders")
+    orders.pre_aggregations = [PreAggregation(
+        name="sch", measures=["revenue", "order_count"],
+        dimensions=["status"], time_dimension="order_date",
+        granularity="month", partition_granularity=partition,
+    )]
+    layer.preaggs.base_path = str(tmp_path)
+    name = "orders_preagg_sch"
+    materialize = partial(layer.preaggs.materialize, "orders")
+    materialize()  # warm: the first build of a plan shape may differ
+    _, jobs = jobs_fired(spark, materialize)
+    view_schema = spark.table(name).schema
+    inferred = spark.read.parquet(str(tmp_path / name)).schema
+    assert view_schema == inferred
+
+    real = PreAggManager.register_one
+    monkeypatch.setattr(
+        PreAggManager, "register_one", lambda self, m, pa, schema=None: real(self, m, pa)
+    )
+    assert jobs_fired(spark, materialize)[1] == jobs + 1
+    assert spark.table(name).schema == view_schema
