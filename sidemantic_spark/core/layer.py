@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sidemantic_spark.core.graph import SemanticGraph
 from sidemantic_spark.core.model import Metric, Model
+from sidemantic_spark.sql import splits
 from sidemantic_spark.sql.generator import QuerySpec, SqlGenerator
 
 
@@ -27,6 +28,7 @@ class SparkSemanticLayer:
         self.spark = spark
         self.graph = SemanticGraph()
         self.generator = SqlGenerator(self.graph)
+        self.generator.split_probe = splits.probe_for(spark)
         # reference semantic_layer.py escape hatch: skip the
         # semi-additive rewrite, aggregate naively over all snapshots
         self.generator.allow_non_additive_unsafe = allow_non_additive_unsafe

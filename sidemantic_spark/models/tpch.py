@@ -35,11 +35,17 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
     reader rejects; we read nanos as LONG (legacy conf) and cast back to
     timestamps in the view — a JVM-side, codegen'd cast on top of the
     scan, so pushdown on other columns is preserved.
+
+    The schema comes from the file footer (read with pyarrow) and is
+    handed to the reader, so registering fires no schema-inference job.
     """
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ntz = spark.conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+    ).lower() == "true"
     import os as _os
 
     for t in TABLES:
@@ -58,7 +64,7 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
         nanos_cols = [
             f.name for f in schema if str(f.type).startswith("timestamp[ns")
         ]
-        df = spark.read.parquet(path)
+        df = spark.read.schema(_footer_schema(schema, ntz)).parquet(path)
         for c in nanos_cols:
             df = df.withColumn(
                 # integer division: a double roundtrip has 256ns ulp at 2024
@@ -66,6 +72,26 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
                 c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
             )
         df.createOrReplaceTempView(t)
+
+
+def _footer_schema(schema, ntz: bool = True):
+    """The Spark schema ``spark.read.parquet`` infers for a file whose
+    pyarrow footer schema is ``schema``: every field nullable, a
+    zone-less timestamp as TIMESTAMP_NTZ when ``ntz`` (Spark's
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``), and a nanosecond
+    timestamp as the BIGINT the ``nanosAsLong`` read yields."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    return T.StructType([
+        T.StructField(
+            f.name,
+            T.LongType() if str(f.type).startswith("timestamp[ns")
+            else from_arrow_type(f.type, prefer_timestamp_ntz=ntz),
+            True,
+        )
+        for f in schema
+    ])
 
 
 def build_layer(spark: SparkSession, sf_dir: str | None = None) -> SparkSemanticLayer:

@@ -319,7 +319,10 @@ def _build_ungrouped_sql(gen, r, match: PreAggMatch) -> str:
         for f in r.spec.filters
         for conj in split_conjuncts(f)
     ]
-    sql = "SELECT\n    " + ",\n    ".join(select) + f"\nFROM {physical}"
+    sql = (
+        f"SELECT{gen._read_hint(physical)}\n    " + ",\n    ".join(select)
+        + f"\nFROM {physical}"
+    )
     if where:
         sql += "\nWHERE " + "\n  AND ".join(f"({w})" for w in where)
     sql += gen._order_limit(r)
@@ -466,7 +469,7 @@ def _build_join_sql(
     if policy is not None:
         policy.check_access(remote.name, r.spec.user)
         remote_where += policy.rendered_row_filters(remote.name, r.spec.user)
-    remote_sql = "SELECT " + ", ".join(
+    remote_sql = f"SELECT{gen._read_hint(remote_source)} " + ", ".join(
         expr if expr == alias else f"{expr} AS {alias}"
         for alias, expr in remote_sel.items()
     ) + f" FROM {remote_source}"
@@ -476,7 +479,7 @@ def _build_join_sql(
     rollup_where = [
         replace_refs(c, known, rollup_col) for c in local_filters
     ]
-    rollup_sql = f"SELECT * FROM {physical}"
+    rollup_sql = f"SELECT{gen._read_hint(physical)} * FROM {physical}"
     if rollup_where:
         rollup_sql += " WHERE " + " AND ".join(f"({w})" for w in rollup_where)
 
@@ -615,7 +618,7 @@ def _build_sql(gen, r, match: PreAggMatch) -> str:
         tcol = f"{pa.time_dimension}__{pa.granularity}"
         fresh = rollup_select_sql(model, pa, extra_where=f"{texpr} >= {boundary}")
         physical = (
-            f"(SELECT * FROM {pa.physical_name(model.name)} WHERE {tcol} < {boundary}\n"
+            f"(SELECT{gen._read_hint(physical)} * FROM {physical} WHERE {tcol} < {boundary}\n"
             f" UNION ALL\n{fresh})"
         )
     exact = all(regrain is None for _col, regrain in match.dim_map.values()) and (
@@ -663,7 +666,10 @@ def _build_sql(gen, r, match: PreAggMatch) -> str:
             else:
                 where.append(replace_refs(conj, known, rollup_col))
 
-    sql = "SELECT\n    " + ",\n    ".join(select) + f"\nFROM {physical}"
+    # the hint must sit below the GROUP BY, so the read is a subquery
+    hint = gen._read_hint(physical)
+    source = f"(SELECT{hint} * FROM {physical}) {physical}" if hint else physical
+    sql = "SELECT\n    " + ",\n    ".join(select) + f"\nFROM {source}"
     if where:
         sql += "\nWHERE " + "\n  AND ".join(f"({w})" for w in where)
     if group:

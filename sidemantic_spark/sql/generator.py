@@ -44,7 +44,7 @@ from sidemantic_spark.core.model import (
     Metric,
     Model,
 )
-from sidemantic_spark.sql import fragments
+from sidemantic_spark.sql import fragments, splits
 from sidemantic_spark.sql.fragments import (
     find_refs,
     interval_sql,
@@ -162,18 +162,31 @@ class SqlGenerator:
         # equivalent results, fewer exchanges; the flag keeps the join
         # shape reachable (A/B measurement, fallback)
         self.multifact_union_combine = True
+        # which sources Spark reads with one task (sql/splits.py); the
+        # owning layer sets its session's probe, this one reads plainly
+        self.split_probe = splits.SplitProbe(None)
 
     # ------------------------------------------------------------------
     # public entry
     # ------------------------------------------------------------------
     def generate(self, spec: QuerySpec) -> str:
+        """Compile ``spec``; cached.  An entry keeps the single-split
+        decisions it was compiled under and is served only while they
+        all still hold, so they are part of its key."""
         key = self._cache_key(spec)
         hit = self._cache.get(key)
-        if hit is not None:
-            return hit
-        sql = self._generate(spec)
-        self._cache[key] = sql
+        if hit is not None and self.split_probe.holds(hit[1]):
+            return hit[0]
+        with self.split_probe.recording() as used:
+            sql = self._generate(spec)
+        self._cache[key] = (sql, tuple(used.items()))
         return sql
+
+    def _read_hint(self, source: str) -> str:
+        """`` /*+ COALESCE(1) */``, to follow the SELECT keyword of a
+        read of ``source``, when Spark reads it with one task
+        (sql/splits.py); else empty."""
+        return " " + splits.HINT if self.split_probe.single_split(source) else ""
 
     def generate_view(
         self,
@@ -1332,7 +1345,7 @@ class SqlGenerator:
                     break
         if source is None:
             raise QueryCompileError(f"model {model_name!r} has no table/sql binding")
-        sql = f"SELECT\n        {select}\n    FROM {source}"
+        sql = f"SELECT{self._read_hint(source)}\n        {select}\n    FROM {source}"
         if where:
             sql += "\n    WHERE " + "\n      AND ".join(f"({w})" for w in where)
         return f"{model_name}_cte", sql

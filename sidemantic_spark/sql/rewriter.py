@@ -433,21 +433,25 @@ class SemanticSqlRewriter:
             self._eph_gen_bumps = 0
             gen0 = self.layer.graph.generation
             try:
+                # an entry also keeps the single-split decisions of the
+                # sources it read (sql/splits.py) and is served only
+                # while they all still hold
                 hit = self._cache.get(key)
-                if hit is not None:
+                if hit is not None and gen.split_probe.holds(hit[4]):
                     (out, self._applied_rules, self._rejected_rules,
-                     self._pushed_filters) = hit
+                     self._pushed_filters, _used) = hit
                     return out
                 self._applied_rules = []
                 self._rejected_rules = []
                 self._pushed_filters = []
-                out = self._rewrite_node(
-                    _yardstick_normalize(
-                        _normalize_cast_types(
-                            _normalize_compound_keywords(_strip(sql))
+                with gen.split_probe.recording() as used:
+                    out = self._rewrite_node(
+                        _yardstick_normalize(
+                            _normalize_cast_types(
+                                _normalize_compound_keywords(_strip(sql))
+                            )
                         )
                     )
-                )
                 if len(self._cache) >= self._CACHE_MAX:
                     # FIFO-bound: long-running servers (pgwire/HTTP)
                     # must not grow the compile cache without limit
@@ -456,6 +460,7 @@ class SemanticSqlRewriter:
                     out, list(self._applied_rules),
                     list(self._rejected_rules),
                     list(self._pushed_filters),
+                    tuple(used.items()),
                 )
                 return out
             finally:

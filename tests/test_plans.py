@@ -875,3 +875,122 @@ def test_bm25_inline_single_tokenize_checkpoint_pin(spark):
     # one tokenize subtree (the scoring scan) and no token checkpoint:
     # the probe side itself must NOT be an ExistingRDD scan of tokens
     assert splan.count("split(lower(") == 1, splan
+
+
+# ----------------------------------------------------------------------
+# single-split sources (sql/splits.py)
+# ----------------------------------------------------------------------
+
+_HINT = "/*+ COALESCE(1) */"
+_GROUPED = dict(metrics=["orders.revenue"], dimensions=["orders.status"])
+
+
+def _no_shuffle(plan: str) -> bool:
+    return "Exchange" not in plan and "rangepartitioning" not in plan
+
+
+def _split_orders(spark, tmp_path, n: int = 3) -> str:
+    """``orders`` rewritten as a directory of ``n`` parquet files: Spark
+    plans one partition per file (each file pays the 4 MB open cost)."""
+    path = str(tmp_path / "orders_split")
+    spark.table("orders").repartition(n).write.mode("overwrite").parquet(path)
+    return path
+
+
+def test_single_split_grouped_query_is_one_stage(spark, sf_dir):
+    """A grouped query over a source Spark reads with one task plans
+    its aggregate in the scan's stage, and the contract's total order
+    needs no range sort: no Exchange at all.  Pushed filters and the
+    pruned ReadSchema survive the hint (the two pins above)."""
+    import importlib.util
+    import os
+
+    from sidemantic_spark.sql.splits import probe_for
+
+    layer = build_layer(spark, sf_dir)
+    assert probe_for(spark).single_split("orders")
+    assert _HINT in layer.compile(**_GROUPED)
+    df = layer.query(**_GROUPED)
+    plan = _plan(df)
+    assert _no_shuffle(plan), plan
+    # still map-side partial then final, now in one stage
+    assert "partial_sum" in plan and plan.count("HashAggregate") >= 2
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(root, "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    plan = _plan(entry.queries()["basic_agg"](spark, sf_dir))
+    assert "Sort [" in plan and _no_shuffle(plan), plan
+
+
+def test_multi_split_source_keeps_plain_read(spark, sf_dir, tmp_path):
+    """Re-registering ``orders`` over three files drops the hint on the
+    next compile, structured and semantic SQL alike (both caches keep
+    the decision in their key); the plan is partial -> Exchange -> final
+    as without the rule, and the rows are equal."""
+    from sidemantic_spark.models.tpch import register_tables
+
+    register_tables(spark, sf_dir)
+    layer = build_layer(spark, None)
+    semantic = "SELECT orders.status, orders.revenue FROM orders"
+    single_sql = layer.compile(**_GROUPED)
+    assert _HINT in single_sql and _HINT in layer.rewrite(semantic)
+    single_rows = sorted(layer.query(**_GROUPED).collect())
+    path = _split_orders(spark, tmp_path)
+    try:
+        spark.read.parquet(path).createOrReplaceTempView("orders")
+        sql = layer.compile(**_GROUPED)
+        assert sql == single_sql.replace(f" {_HINT}", "")
+        assert _HINT not in layer.rewrite(semantic)
+        df = layer.query(**_GROUPED)
+        plan = _plan(df)
+        assert "Exchange hashpartitioning" in plan, plan
+        assert "partial_sum" in plan
+        assert sorted(df.collect()) == single_rows
+    finally:
+        register_tables(spark, sf_dir)
+    assert layer.compile(**_GROUPED) == single_sql
+
+
+def test_split_decision_fires_no_job_and_is_cached(spark, sf_dir, tmp_path, monkeypatch):
+    """Deciding plans a bare scan and fires no job; a repeated compile
+    does no planning; a refreshed file listing is decided again."""
+    import os
+    import shutil
+
+    from tests.conftest import jobs_fired
+
+    from sidemantic_spark.models.tpch import register_tables
+    from sidemantic_spark.sql.splits import probe_for
+
+    register_tables(spark, sf_dir)
+    layer = build_layer(spark, None)
+    probe = probe_for(spark)
+    planned = []
+    decide = probe._decide
+    monkeypatch.setattr(
+        probe, "_decide", lambda *a: planned.append(a[0]) or decide(*a)
+    )
+    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView("orders")
+    sql, jobs = jobs_fired(spark, lambda: layer.compile(**_GROUPED))
+    assert jobs == 0 and _HINT in sql and planned == ["orders"]
+    assert layer.compile(**_GROUPED) == sql
+    assert layer.compile(metrics=["orders.revenue"]) and planned == ["orders"]
+
+    # a directory view grown from one file to three, then refreshed
+    one = tmp_path / "one"
+    spark.table("orders").coalesce(1).write.parquet(str(one))
+    try:
+        spark.read.parquet(str(one)).createOrReplaceTempView("orders")
+        assert _HINT in layer.compile(**_GROUPED)
+        more = _split_orders(spark, tmp_path)
+        for f in os.listdir(more):
+            if f.endswith(".parquet"):
+                shutil.copy(os.path.join(more, f), one / f"more-{f}")
+        spark.catalog.refreshTable("orders")
+        assert _HINT not in layer.compile(**_GROUPED)
+    finally:
+        register_tables(spark, sf_dir)
